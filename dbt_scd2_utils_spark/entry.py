@@ -242,9 +242,7 @@ def _stream_stage(spark: SparkSession, sf_dir: str, name: str) -> str:
     key = (spark, sf_dir, "stream_stage", name)
     base = _INDEX_CACHE.get(key)
     if base is None:
-        import tempfile
-
-        base = tempfile.mkdtemp(prefix=f"scd_stream_{name}_")
+        base = _owned_tmpdir(f"scd_stream_{name}_")
         _STREAM_BUILDERS[name](spark, sf_dir, base)
         _INDEX_CACHE[key] = base
     return base
@@ -449,8 +447,6 @@ def _staged_target(
     key = (spark, sf_dir, variant)
     tgt = _MERGE_TARGET_CACHE.get(key)
     if tgt is None:
-        import tempfile
-
         b1, _ = _split(change_feed(spark, sf_dir))
         # Materialize to parquet and read back (not persist()): a stored
         # table is a LEAF scan, so every consuming merge plans against a
@@ -461,7 +457,7 @@ def _staged_target(
         # (guide §3.3/§7.3), and target-slice filters now push down to the
         # scan.  This is also what a real incremental run reads: the
         # persisted output of the previous run.
-        base = tempfile.mkdtemp(prefix=f"scd_target_{variant}_")
+        base = _owned_tmpdir(f"scd_target_{variant}_")
         scd2_initial_load(b1, cfg).coalesce(8).write.parquet(f"{base}/t")
         tgt = spark.read.parquet(f"{base}/t")
         _MERGE_TARGET_CACHE[key] = tgt
@@ -499,6 +495,17 @@ def prewarm_merge_targets(spark: SparkSession, sf_dir: str) -> None:
 # The driver's correctness gate runs cold (build + probe) — only slower,
 # never different: the builders are bit-deterministic.
 _INDEX_CACHE: dict = {}
+# The mkdtemp trees the memo entries above own (staged targets, stream
+# stages, gate tables): removed with the memos by release_entry_caches.
+_OWNED_DIRS: list[str] = []
+
+
+def _owned_tmpdir(prefix: str) -> str:
+    import tempfile
+
+    base = tempfile.mkdtemp(prefix=prefix)
+    _OWNED_DIRS.append(base)
+    return base
 
 
 def _pq_books(spark: SparkSession, sf_dir: str, subset: str = "full"):
@@ -633,8 +640,9 @@ def release_entry_caches() -> int:
     """Free EVERY cache the query layer holds: the per-query barriers
     (functions/caching.release_caches) plus the session memo caches
     (_MERGE_TARGET_CACHE, _INDEX_CACHE — the build-once index/target
-    artifacts).  After this a long-lived driver session is back to zero
-    executor storage; the next query call simply rebuilds its memos.
+    artifacts) and the temp dirs those memos staged on disk.  After this
+    a long-lived driver session is back to zero executor storage and no
+    staged /tmp trees; the next query call simply rebuilds its memos.
     Returns how many cached relations were released."""
     from .functions.caching import release_caches
 
@@ -650,6 +658,11 @@ def release_entry_caches() -> int:
             except Exception:
                 pass  # session already stopped
         memo.clear()
+    import shutil
+
+    for base in _OWNED_DIRS:
+        shutil.rmtree(base, ignore_errors=True)
+    _OWNED_DIRS.clear()
     return n
 
 
@@ -1183,14 +1196,12 @@ def _bucketed_scd_table(spark: SparkSession, sf_dir: str, variant: str):
     variant) — repeated gate runs reuse it instead of accumulating /tmp
     dirs, and the memo mirrors ``_staged_target``: a real deployment's
     table already EXISTS; staging it was previous runs' cost."""
-    import tempfile
-
     from .plans.build import ScdTable
 
     key = (spark, sf_dir, "scd_table", variant)
     t = _INDEX_CACHE.get(key)
     if t is None:
-        base = tempfile.mkdtemp(prefix=f"scd_gate_{variant}_")
+        base = _owned_tmpdir(f"scd_gate_{variant}_")
         # The restore gate re-restores generation 0 on EVERY invocation
         # (each one a new commit), so its table needs gen 0 retained far
         # past the default window for repeated gate/bench runs.

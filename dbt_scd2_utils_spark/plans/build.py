@@ -44,6 +44,8 @@ GEN_PREFIX = "_gen-"
 # commit-time rename claims the generation number, so concurrent writers can
 # never scribble into each other's generation dir.
 STAGE_PREFIX = "_stage-"
+# Per-generation manifest snapshots: `_scd_manifest.<gen>.json`.
+SNAPSHOT_PREFIX, SNAPSHOT_SUFFIX = "_scd_manifest.", ".json"
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -149,21 +151,36 @@ class ScdTable:
         count).  A handle without an explicit count adopts (and re-adopts,
         after an external rebucket) the recorded one instead of falling
         back to the unbucketed path, which would also make a default
-        reader miss every generational bucket dir."""
+        reader miss every generational bucket dir.
+
+        An existing table with neither a manifest nor any bucket or
+        generation dir is UNBUCKETED: an explicit count conflicts with it
+        too (merging against its empty bucket slice would hide the
+        table's whole history), and only a full refresh may re-lay it
+        out."""
         rec = (manifest or {}).get("bucket_count")
         if self._explicit_buckets:
+            if manifest is None and self.exists() and not any(
+                n.startswith((f"{BUCKET_COL}=", GEN_PREFIX))
+                for n in os.listdir(self.path)
+            ):
+                rec = 0
             if (
                 isinstance(rec, int)
                 and rec != self.partition_buckets
                 and not relayout_ok
             ):
+                layout, fix = (
+                    (f"bucketed with bucket_count={rec}",
+                     "rebucket() (or a full refresh)")
+                    if rec else ("unbucketed", "build(full_refresh=True)")
+                )
                 raise ValueError(
-                    f"table at {self.path} is bucketed with "
-                    f"bucket_count={rec}, but this writer was constructed "
-                    f"with partition_buckets={self.partition_buckets}; "
-                    "merging under a different bucket mapping would "
-                    "mis-route keys — use rebucket() (or a full refresh) "
-                    "to change the layout"
+                    f"table at {self.path} is {layout}, but this writer was "
+                    "constructed with "
+                    f"partition_buckets={self.partition_buckets}; merging "
+                    "under a different bucket mapping would mis-route keys "
+                    f"— use {fix} to change the layout"
                 )
             return self.partition_buckets
         if isinstance(rec, int):
@@ -192,51 +209,50 @@ class ScdTable:
     # -- partition manifest ----------------------------------------------
     #
     # The in-repo stand-in for a table format's commit log (Delta/Iceberg,
-    # which this environment cannot install): a tiny JSON file mapping
-    # bucket id -> {files, rows} plus the on-disk data schema, rewritten
-    # ATOMICALLY (tmp + os.replace) at every swap.  Without it, an
-    # incremental merge's target-slice read (`spark.read.parquet(table)`)
-    # pays a full InMemoryFileIndex listing of EVERY bucket partition —
-    # with fixed ~50k-row buckets that listing grows O(table size) while
-    # the data work is O(affected buckets), and at 100 TB the metadata
-    # term dominates the merge (measured at s40: ~2.3 s of a ~11 s merge,
-    # growing).  With the manifest, a merge resolves its affected buckets'
-    # file paths with one driver-side JSON read — O(batch), not O(table).
-    #
-    # Crash safety: the manifest is advisory, never authoritative.  Every
-    # read verifies the listed files still exist; a bucket whose entry is
-    # stale (crash between partition swap and manifest write) or missing
-    # falls back to an os.listdir of THAT bucket directory only — still
-    # O(affected).  A wrong manifest can therefore cost a re-list, never
-    # wrong data.
-    #
-    # SNAPSHOT ISOLATION (r11): the manifest is now a versioned commit log
-    # in miniature, the same shape Delta/Iceberg use (immutable data files
-    # + an atomically-replaced pointer):
+    # which this environment cannot install): one JSON file in ONE format,
+    # replaced ATOMICALLY (tmp + os.replace) at every commit:
     #
     #   { "gen": G,                      -- monotonically increasing commit id
-    #     "schema": <json>,
+    #     "schema": <json>,              -- the data schema
     #     "buckets": { "<b>": {"paths": [<root-relative paths>], "rows": n} },
-    #     "superseded": { "<S>": [<paths displaced by commit S>] } }
+    #     "superseded": { "<S>": [<paths displaced by commit S>] },
+    #     "retain": R, "bucket_count": N,           -- table properties
+    #     "op": ..., "committed_at": t, "txn": {app: epoch} }  -- provenance
     #
-    # A merge never mutates or deletes a live file: it writes its rewritten
-    # buckets into a fresh immutable `_gen-<G>/` directory (invisible to
-    # readers until committed), then commits by atomically replacing the
-    # manifest.  A reader therefore serves a CONSISTENT SNAPSHOT from
-    # whichever manifest it loaded — a concurrent merge can no longer pull
-    # files out from under a planned query, which the old in-place partition
-    # swap did.  Files displaced by commit S (last referenced by manifest
-    # S-1) go on the `superseded` ledger and are vacuumed only once
-    # `retain_generations` further commits have happened (S <= G - retain),
-    # so any snapshot stays readable across at least `retain_generations`
-    # subsequent merges; vacuum work is O(files displaced then), never
-    # O(table).  A crash after the gen-dir write but before the manifest
-    # commit leaves an invisible orphan `_gen-*` directory (gen > committed
-    # gen) that the next merge sweeps.  Legacy pre-generation manifests
-    # ({"files": [names]} entries, no "gen") keep the old verify-and-relist
-    # read path and are migrated in place by their next merge.
+    # Without it, an incremental merge's target-slice read pays a full
+    # InMemoryFileIndex listing of EVERY bucket partition — O(table size)
+    # while the data work is O(affected buckets); at 100 TB the metadata
+    # term dominates the merge (measured at s40: ~2.3 s of a ~11 s merge,
+    # growing).  With it, a merge resolves its affected buckets' file
+    # paths with one driver-side JSON read — O(batch), not O(table).
     #
-    # Full refresh/initial builds still swap the whole table directory
+    # Snapshot isolation: a merge never mutates or deletes a live file.  It
+    # writes its rewritten buckets into a fresh immutable `_gen-<G>/`
+    # directory (invisible to readers until committed), then commits by
+    # atomically replacing the manifest, so a reader serves a CONSISTENT
+    # SNAPSHOT from whichever manifest it loaded.  Files displaced by
+    # commit S (last referenced by manifest S-1) go on the `superseded`
+    # ledger and are vacuumed only once `retain_generations` further
+    # commits have happened (S <= G - retain), so any snapshot stays
+    # readable across at least `retain_generations` subsequent merges;
+    # vacuum work is O(files displaced then), never O(table).  A crash
+    # after the gen-dir write but before the manifest commit leaves an
+    # invisible orphan `_gen-*` directory that the next commit sweeps.
+    #
+    # Crash safety: the manifest is advisory, never authoritative for file
+    # existence.  Every read verifies the listed files still exist; an
+    # entry listing vanished files (external tampering) re-lists THAT one
+    # directory — a wrong manifest costs a re-list, never wrong data.
+    #
+    # Recovery: a manifest that is missing, unreadable or not in the form
+    # above (for instance the pre-generation `{"files": [...]}` entries
+    # with no "gen") counts as LOST.  Manifest-loss recovery
+    # (`_scan_full_manifest`) is the one path for all of these: it rebuilds
+    # the bucket map from the root bucket dirs and every complete
+    # `_gen-*` dir, newest generation winning per bucket; reads serve the
+    # rebuilt file set and the next commit persists it.
+    #
+    # Full refresh/initial builds swap the whole table directory
     # (`_atomic_write`) — snapshot isolation covers the incremental merge
     # path, where the race was real; a full refresh replaces the table
     # wholesale, same as the reference's table materialization.
@@ -250,10 +266,32 @@ class ScdTable:
         (``read(at_gen=...)``) to any generation still inside the vacuum
         retention window.  Same lifecycle as the data files: kept for
         gens in [current - retain_generations, current], removed after."""
-        return os.path.join(self.path, f"_scd_manifest.{gen:08d}.json")
+        return os.path.join(
+            self.path, f"{SNAPSHOT_PREFIX}{gen:08d}{SNAPSHOT_SUFFIX}"
+        )
+
+    def _numbered_entries(
+        self, prefix: str, suffix: str = ""
+    ) -> list[tuple[int, str]]:
+        """``(n, name)`` for every ``<prefix><n><suffix>`` entry of the
+        table dir, sorted by the PARSED number — the one parser for
+        `_gen-<n>` dirs and `_scd_manifest.<n>.json` snapshots.  Numeric
+        order matters: lexicographic dirname order would invert
+        newest-wins the day a counter outgrows the zero-padding width."""
+        try:
+            names = os.listdir(self.path)
+        except OSError:
+            return []
+        out = []
+        for name in names:
+            if name.startswith(prefix) and name.endswith(suffix):
+                stem = name[len(prefix):len(name) - len(suffix)]
+                if stem.isdecimal():
+                    out.append((int(stem), name))
+        return sorted(out)
 
     def _write_snapshot_manifest(self, manifest: dict) -> None:
-        gen = manifest.get("gen", 0)
+        gen = manifest["gen"]
         tmp = self._snapshot_manifest_path(gen) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(manifest, f)
@@ -261,15 +299,8 @@ class ScdTable:
         # Expire snapshots whose generation fell out of retention — their
         # referenced files are (or are about to be) vacuumed, so serving
         # them would be a lie.  O(retained snapshots), tiny files.
-        for name in os.listdir(self.path):
-            if not (
-                name.startswith("_scd_manifest.") and name.endswith(".json")
-            ):
-                continue
-            stem = name[len("_scd_manifest."):-len(".json")]
-            if not stem.isdigit():
-                continue
-            if int(stem) < gen - self._retain(manifest):
+        for g, name in self._numbered_entries(SNAPSHOT_PREFIX, SNAPSHOT_SUFFIX):
+            if g < gen - self._retain(manifest):
                 try:
                     os.remove(os.path.join(self.path, name))
                 except OSError:
@@ -284,18 +315,7 @@ class ScdTable:
         serve — ``history()`` and ``read_at_timestamp()`` both resolve
         through it."""
         out: dict[int, dict] = {}
-        try:
-            names = os.listdir(self.path)
-        except OSError:
-            names = []
-        for name in names:
-            if not (
-                name.startswith("_scd_manifest.") and name.endswith(".json")
-            ):
-                continue
-            stem = name[len("_scd_manifest."):-len(".json")]
-            if not stem.isdigit():
-                continue
+        for _g, name in self._numbered_entries(SNAPSHOT_PREFIX, SNAPSHOT_SUFFIX):
             try:
                 with open(os.path.join(self.path, name)) as f:
                     m = json.load(f)
@@ -304,7 +324,7 @@ class ScdTable:
             if isinstance(m.get("gen"), int) and m["gen"] not in out:
                 out[m["gen"]] = m
         current = self._read_manifest()
-        if current is not None and isinstance(current.get("gen"), int):
+        if current is not None:
             out.setdefault(current["gen"], current)
         return out
 
@@ -314,13 +334,14 @@ class ScdTable:
         generation whose manifest snapshot is still inside the vacuum
         retention window, from the per-gen snapshot files (driver-local
         JSON reads, O(retained), never a data scan).  Columns: ``gen``,
-        ``op`` (create / merge / rebucket / restore / delete; null for
-        pre-r12 commits),
-        ``committed_at`` (UTC; null for pre-r12 commits), ``n_buckets``,
+        ``op`` (create / merge / rebucket / restore / delete),
+        ``committed_at`` (UTC), ``n_buckets``,
         ``n_files``, ``rows`` (null if any footer count was unknown),
         ``bucket_count``, ``readable`` (whether ``read_at_gen`` can still
         serve it — always true by construction, recorded for symmetry
-        with deployments that vacuum out-of-band)."""
+        with deployments that vacuum out-of-band).  Generations rebuilt
+        by manifest-loss recovery carry no ``op``/``committed_at``; both
+        are null for them."""
         from pyspark.sql.types import (
             BooleanType,
             IntegerType,
@@ -353,7 +374,7 @@ class ScdTable:
                 datetime.datetime.fromtimestamp(ts, datetime.timezone.utc)
                 if isinstance(ts, (int, float)) else None,
                 len(buckets),
-                sum(len(self._entry_paths(b, e)) for b, e in buckets.items()),
+                sum(len(e["paths"]) for e in buckets.values()),
                 sum(entry_rows) if all(r >= 0 for r in entry_rows) else None,
                 m.get("bucket_count"),
                 True,
@@ -373,26 +394,16 @@ class ScdTable:
         except OSError:
             # The CURRENT generation is always servable from the main
             # manifest even if its snapshot copy is missing (crash between
-            # the manifest commit and the snapshot write, or a legacy
-            # table normalized in place whose base gen predates snapshots).
-            current_manifest = self._read_manifest()
-            if (
-                current_manifest is not None
-                and current_manifest.get("gen") == gen
-                and current_manifest.get("schema")
-            ):
-                manifest = current_manifest
-            else:
-                current = (current_manifest or {}).get("gen")
+            # the manifest commit and the snapshot write).
+            manifest = self._read_manifest()
+            if manifest is None or manifest["gen"] != gen:
                 raise ValueError(
                     f"no retained snapshot for generation {gen} "
-                    f"(current gen: {current}, retention: "
-                    f"{self._retain(current_manifest)} generations — older "
-                    "snapshots are vacuumed)"
+                    f"(current gen: {(manifest or {}).get('gen')}, "
+                    f"retention: {self._retain(manifest)} generations — "
+                    "older snapshots are vacuumed)"
                 ) from None
-        files, stale = self._affected_files(
-            manifest, sorted(manifest.get("buckets", {}))
-        )
+        files, stale = self._affected_files(manifest)
         return self._leaf_read(files, stale, manifest["schema"])
 
     def _key_match_cond(self, left_alias: str, right_alias: str):
@@ -410,7 +421,8 @@ class ScdTable:
         schema on a clean manifest, merge footers when the manifest is
         behind disk (crash recovery — see _affected_files), empty relation
         of the recorded schema when no files remain.  Shared by read(),
-        read_at_gen() and read_keys()."""
+        read_at_gen(), read_keys(), the merge's target slice and
+        rebucket's source."""
         from pyspark.sql.types import StructType
 
         schema = StructType.fromJson(json.loads(schema_json))
@@ -457,11 +469,7 @@ class ScdTable:
                 "left_semi",
             )
 
-        if (
-            not self.partition_buckets
-            or manifest is None
-            or not manifest.get("schema")
-        ):
+        if not self.partition_buckets or manifest is None:
             return _semi(self.read())
         affected = [
             r[0]
@@ -484,8 +492,9 @@ class ScdTable:
 
         ``ts`` may be an ISO-8601 string, a ``datetime`` (naive means
         UTC — ``committed_at`` is recorded as UTC epoch seconds), or an
-        epoch-seconds number.  Pre-r12 commits carry no ``committed_at``
-        and are not resolvable by timestamp (use ``read_at_gen``)."""
+        epoch-seconds number.  Generations rebuilt by manifest-loss
+        recovery carry no ``committed_at`` and are not resolvable by
+        timestamp (use ``read_at_gen``)."""
         import datetime
 
         if isinstance(ts, str):
@@ -538,12 +547,24 @@ class ScdTable:
         return self.read_at_gen(max(hits))
 
     def _read_manifest(self) -> dict | None:
+        """The committed manifest, or None when there is no manifest in
+        the one supported form (an int ``gen``, a dict ``buckets`` and a
+        ``schema``) — the caller then takes manifest-loss recovery (see
+        the manifest note above)."""
         try:
             with open(self._manifest_path()) as f:
                 m = json.load(f)
-            return m if isinstance(m.get("buckets"), dict) else None
         except (OSError, ValueError):
             return None
+        if not (
+            isinstance(m, dict)
+            and isinstance(m.get("gen"), int)
+            and isinstance(m.get("buckets"), dict)
+            and m.get("schema")
+        ):
+            return None
+        m.setdefault("superseded", {})
+        return m
 
     def _write_manifest(self, manifest: dict) -> None:
         tmp = self._manifest_path() + ".tmp"
@@ -573,14 +594,33 @@ class ScdTable:
             rows = -1  # unknown; files list is still valid
         return {"files": names, "rows": rows}
 
-    def _scan_full_manifest(
-        self, data_schema_json: str, root: str | None = None
-    ) -> dict:
-        """Full-table scan building a fresh new-style manifest.  Used only
-        where a full listing is already proportional to the work just done
-        (the initial/full-refresh write) or as a one-time migration for a
-        manifest-less table.  Scans the root bucket dirs (gen-0 / legacy
-        layout) and every COMPLETE ``_gen-*`` dir — a generation without
+    def _scan_layer(self, layer_dir: str, rel_root: str) -> dict[str, dict]:
+        """bucket id -> manifest entry ({paths, rows}) for every bucket
+        partition dir directly under ``layer_dir``, paths recorded under
+        ``rel_root`` — the root-relative name the layer has once committed
+        (a stage dir is scanned before its rename onto ``_gen-<G>``)."""
+        prefix = f"{rel_root}/" if rel_root else ""
+        out: dict[str, dict] = {}
+        try:
+            names = os.listdir(layer_dir)
+        except OSError:
+            return out
+        for name in names:
+            if not name.startswith(f"{BUCKET_COL}="):
+                continue
+            entry = self._scan_bucket_dir(os.path.join(layer_dir, name))
+            if entry is not None:
+                out[name.split("=", 1)[1]] = {
+                    "paths": [f"{prefix}{name}/{n}" for n in entry["files"]],
+                    "rows": entry["rows"],
+                }
+        return out
+
+    def _scan_full_manifest(self) -> dict:
+        """Manifest-loss recovery: rebuild the manifest from disk (its
+        ``schema`` is None — the caller derives one from the footers if
+        it needs it).  Scans the root bucket dirs (the layout a full build
+        writes) and every COMPLETE ``_gen-*`` dir — a generation without
         Spark's ``_SUCCESS`` marker is a torn write and is skipped, never
         adopted (the committed-manifest path sweeps it as an orphan; a
         complete-but-uncommitted one IS adopted: at-least-once commit
@@ -593,104 +633,27 @@ class ScdTable:
         Honest limitation: the manifest is the ONLY record that a merge
         emptied a bucket, so losing it while that bucket's superseded
         files are still inside the retention window resurrects those rows
-        (they are indistinguishable from live legacy data).  SCD merges
-        never delete rows — type 2 retires them in place — so the popped-
-        entry path is defensive; a deployment that hard-deletes buckets
-        must not discard the manifest."""
-        base = root if root is not None else self.path
+        (they are indistinguishable from live data).  SCD merges never
+        delete rows — type 2 retires them in place — so the popped-entry
+        path is defensive; a deployment that hard-deletes buckets must
+        not discard the manifest."""
+        layers = [(0, "")] + [
+            (g, d) for g, d in self._numbered_entries(GEN_PREFIX)
+            if os.path.exists(os.path.join(self.path, d, "_SUCCESS"))
+        ]
         buckets: dict[str, dict] = {}
         losers: list[str] = []
-
-        def scan_layer(rel_root: str) -> None:
-            layer = os.path.join(base, rel_root) if rel_root else base
-            try:
-                names = os.listdir(layer)
-            except OSError:
-                return
-            for name in names:
-                if not name.startswith(f"{BUCKET_COL}="):
-                    continue
-                entry = self._scan_bucket_dir(os.path.join(layer, name))
-                if entry is None:
-                    continue
-                b = name.split("=", 1)[1]
-                prefix = f"{rel_root}/" if rel_root else ""
+        for _g, rel in layers:
+            for b, e in self._scan_layer(os.path.join(self.path, rel), rel).items():
                 if b in buckets:
                     losers.extend(buckets[b]["paths"])
-                buckets[b] = {
-                    "paths": [f"{prefix}{name}/{n}" for n in entry["files"]],
-                    "rows": entry["rows"],
-                }
-        scan_layer("")
-        # Numeric sort by parsed generation — lexicographic dirname order
-        # would silently invert newest-wins precedence the day a counter
-        # outgrows the zero-padding width, resurrecting superseded rows
-        # during manifest-loss recovery.
-        gen_dirs: list[tuple[int, str]] = []
-        for n in os.listdir(base):
-            if not n.startswith(GEN_PREFIX):
-                continue
-            try:
-                gen_dirs.append((int(n[len(GEN_PREFIX):]), n))
-            except ValueError:
-                continue
-        top = 0
-        for g, gd in sorted(gen_dirs):
-            if not os.path.exists(os.path.join(base, gd, "_SUCCESS")):
-                continue  # torn write — never adopt
-            scan_layer(gd)
-            top = max(top, g)
+                buckets[b] = e
+        top = layers[-1][0]
         return {
             "gen": top,
             "buckets": buckets,
-            "schema": data_schema_json,
+            "schema": None,
             "superseded": {str(top): losers} if losers else {},
-        }
-
-    @staticmethod
-    def _entry_paths(bucket_id, entry: dict) -> list[str]:
-        """Root-relative data-file paths for one manifest bucket entry —
-        new-style entries carry them directly; legacy entries carry bare
-        file names relative to the root bucket dir."""
-        if "paths" in entry:
-            return list(entry["paths"])
-        return [f"{BUCKET_COL}={bucket_id}/{n}" for n in entry["files"]]
-
-    def _normalize_manifest(self, manifest: dict) -> dict:
-        """Upgrade a legacy manifest to the generational form in memory
-        (the caller's commit persists it): entries become root-relative
-        path lists, gen 0 and an empty superseded ledger are seeded, and
-        any root bucket dir the legacy manifest never learned about (a
-        crashed old-protocol swap wrote it live) is adopted — after which
-        the manifest is authoritative for bucket membership and the read
-        path never has to guess whether an unlisted root dir is live data
-        or vacuum-pending garbage."""
-        if "gen" in manifest:
-            manifest.setdefault("superseded", {})
-            return manifest
-        buckets: dict[str, dict] = {}
-        for b, e in manifest.get("buckets", {}).items():
-            buckets[str(b)] = {
-                "paths": self._entry_paths(b, e),
-                "rows": e.get("rows", -1),
-            }
-        for name in os.listdir(self.path):
-            if not name.startswith(f"{BUCKET_COL}="):
-                continue
-            b = name.split("=", 1)[1]
-            if b in buckets:
-                continue
-            fresh = self._scan_bucket_dir(os.path.join(self.path, name))
-            if fresh is not None:
-                buckets[b] = {
-                    "paths": [f"{name}/{n}" for n in fresh["files"]],
-                    "rows": fresh["rows"],
-                }
-        return {
-            "gen": 0,
-            "buckets": buckets,
-            "schema": manifest.get("schema"),
-            "superseded": {},
         }
 
     # Abandoned-staging TTL: a crashed writer's `_stage-<uuid>/` dir stops
@@ -785,11 +748,7 @@ class ScdTable:
         gen = manifest["gen"]
         with self._commit_lock() as locked:
             live = self._read_manifest()
-            live_gen = (
-                live.get("gen")
-                if live is not None and isinstance(live.get("gen"), int)
-                else None
-            )
+            live_gen = live["gen"] if live is not None else None
             if (
                 base_gen is not None
                 and live_gen is not None
@@ -860,22 +819,109 @@ class ScdTable:
 
         return os.path.join(self.path, f"{STAGE_PREFIX}{uuid.uuid4().hex}")
 
-    def _commit_and_vacuum(
+    # -- the one commit path --------------------------------------------
+    #
+    # The generational writers (merge, delete_keys, rebucket, restore)
+    # open with ``_begin_commit`` and finish with ``_commit``; every
+    # bucketed data write (theirs and create's) goes through
+    # ``_write_buckets``; and every commit, create included, sets its
+    # manifest keys in ``_stamp``.
+
+    def _begin_commit(self, manifest: dict) -> None:
+        """Commit preamble: sweep crashed writers' leftovers (orphan
+        generations above the live one, aged-out private stages) and
+        backfill the base generation's snapshot if it is missing (a
+        manifest-loss recovery, or a crash between a commit and its
+        snapshot write) — the state this commit displaces must stay
+        time-travel-readable for the full retention window."""
+        self._sweep_orphan_generations()
+        self._sweep_stale_stages()
+        if manifest["schema"] and not os.path.exists(
+            self._snapshot_manifest_path(manifest["gen"])
+        ):
+            self._write_snapshot_manifest(manifest)
+
+    def _write_buckets(
         self,
+        df: DataFrame,
         stage_dir: str,
-        gen_dir: str,
-        base_gen: int | None,
+        partitions: int,
+        rel_root: str = "",
+        buckets: int | None = None,
+    ) -> dict[str, dict]:
+        """Write ``df`` hash-bucketed (``buckets``, default the table's
+        count) into ``stage_dir`` and return the manifest entries of the
+        buckets written, paths under ``rel_root``.  ``partitions`` is the
+        number of buckets the rows span: the co-locating repartition
+        writes ONE file per bucket partition, not one per shuffle task per
+        partition — without it the table's file count grows ∝ writes ×
+        buckets and every later listing pays for all of them (measured:
+        the s40 bucketed merge cost grew WITH the table until this fix)."""
+        (
+            df.withColumn(BUCKET_COL, self._bucket_expr(df, buckets))
+            .repartition(partitions, F.col(BUCKET_COL))
+            .write.mode("overwrite")
+            .partitionBy(BUCKET_COL)
+            .parquet(stage_dir)
+        )
+        return self._scan_layer(stage_dir, rel_root)
+
+    def _stamp(
+        self,
         manifest: dict,
         gen: int,
+        schema_json: str,
+        op: str,
+        bucket_count: int | None,
+        txn_epoch: int | None = None,
+        txn_app: str = "default",
     ) -> None:
-        """The shared commit choreography for merge and rebucket:
-        transaction (conflict check / claim / publish), provenance meta,
-        then the deferred vacuum — whose ledger shrink is persisted on
-        CONTENT change (a partial vacuum failure re-adds a key with fewer
-        paths, same key count) and only if this commit is still the
-        latest.  Phase-timed into ``last_phase_times``."""
+        """Set a commit's manifest keys — the one place they are assigned.
+        ``retain`` records the effective retention as a TABLE property (an
+        explicit constructor value updates it; default writers inherit
+        it), so no later writer can vacuum underneath a reader that opened
+        the table under a longer window.  ``txn`` records the stream epoch
+        atomically WITH the data pointer, scoped per writer application
+        (Delta txnAppId/txnVersion): replaying the epoch after any crash
+        sees either no trace of it (orphan gen swept, re-merge) or the
+        completed commit (skipped), and an unrelated stream's epoch
+        counter can never shadow this one's (see build()'s note)."""
+        manifest["gen"] = gen
+        manifest["schema"] = schema_json
+        manifest["retain"] = self._retain(manifest)
+        manifest["bucket_count"] = bucket_count
+        manifest["op"] = op
+        manifest["committed_at"] = time.time()
+        if txn_epoch is not None:
+            manifest.setdefault("txn", {})[txn_app] = txn_epoch
+
+    def _commit(
+        self,
+        manifest: dict,
+        stage_dir: str,
+        displaced: list[str],
+        **stamp,
+    ) -> None:
+        """Commit ``stage_dir`` as the generation after ``manifest["gen"]``
+        (the generation the caller planned against): ledger the
+        root-relative ``displaced`` paths under the new generation for
+        deferred vacuum, stamp the manifest (``stamp`` are ``_stamp``'s
+        keyword arguments), then the transaction (conflict check / claim /
+        publish), provenance meta, the deferred vacuum — whose ledger
+        shrink is persisted on CONTENT change (a partial vacuum failure
+        re-adds a key with fewer paths, same key count) and only if this
+        commit is still the latest — and a refresh of cached listings of
+        the table.  Phase-timed into ``last_phase_times``."""
+        base_gen = manifest["gen"]
+        gen = base_gen + 1
+        if displaced:
+            manifest["superseded"][str(gen)] = displaced
+        self._stamp(manifest, gen, **stamp)
         t0 = time.perf_counter()
-        self._commit_transaction(stage_dir, gen_dir, base_gen, manifest)
+        self._commit_transaction(
+            stage_dir, os.path.join(self.path, _gen_dirname(gen)), base_gen,
+            manifest,
+        )
         self._write_meta()
         self.last_phase_times["swap_and_commit"] = time.perf_counter() - t0
         t0 = time.perf_counter()
@@ -884,6 +930,7 @@ class ScdTable:
         if json.dumps(manifest["superseded"], sort_keys=True) != ledger_before:
             self._persist_ledger_if_unchanged(manifest, gen)
         self.last_phase_times["vacuum"] = time.perf_counter() - t0
+        self.spark.catalog.refreshByPath(self.path)
 
     def _sweep_orphan_generations(self) -> None:
         """Remove `_gen-*` dirs newer than the LIVE committed generation —
@@ -905,17 +952,10 @@ class ScdTable:
             if not locked:
                 return
             live = self._read_manifest()
-            if live is None or not isinstance(live.get("gen"), int):
+            if live is None:
                 return  # no committed baseline to judge orphans against
-            committed_gen = live["gen"]
-            for name in os.listdir(self.path):
-                if not name.startswith(GEN_PREFIX):
-                    continue
-                try:
-                    g = int(name[len(GEN_PREFIX):])
-                except ValueError:
-                    continue
-                if g > committed_gen:
+            for g, name in self._numbered_entries(GEN_PREFIX):
+                if g > live["gen"]:
                     shutil.rmtree(
                         os.path.join(self.path, name), ignore_errors=True
                     )
@@ -966,17 +1006,7 @@ class ScdTable:
         # garbage _prune_dir exists to prevent).  _prune_dir refuses any
         # dir holding real files or subdirs, so generations whose files
         # are still live are untouched; one driver-local listdir.
-        try:
-            names = os.listdir(self.path)
-        except OSError:
-            names = []
-        for name in names:
-            if not name.startswith(GEN_PREFIX):
-                continue
-            try:
-                g = int(name[len(GEN_PREFIX):])
-            except ValueError:
-                continue
+        for g, name in self._numbered_entries(GEN_PREFIX):
             if g <= gen - eff:
                 self._prune_dir(os.path.join(self.path, name))
         return removed
@@ -1009,52 +1039,34 @@ class ScdTable:
             return False
 
     def _affected_files(
-        self, manifest: dict | None, affected: list
+        self, manifest: dict, affected: list | None = None
     ) -> tuple[list[str], bool]:
-        """(absolute data-file paths for the affected buckets, any_stale) —
-        manifest-first with per-bucket verify-and-relist fallback (see class
-        note above).  ``any_stale`` tells the caller the manifest is behind
-        the disk state (crash between swap and commit), in which case its
-        recorded SCHEMA must not be trusted either: the swapped-in files may
+        """(absolute data-file paths for the ``affected`` buckets — all of
+        the manifest's buckets by default — any_stale): manifest-first
+        with per-bucket verify-and-relist fallback (see the manifest note
+        above).  Bucket membership is authoritative: a bucket with no
+        entry is either normal growth or a bucket a merge emptied, whose
+        root dir (if any) holds only SUPERSEDED files awaiting vacuum that
+        must not be resurrected.  ``any_stale`` tells the caller a listed
+        file vanished (external tampering — our own commits never delete
+        a referenced file inside the retention window), in which case the
+        recorded SCHEMA must not be trusted either: the relisted files may
         carry a newer schema, and pinning the old one would silently drop
         columns — the one way an advisory manifest could yield wrong data
         rather than a re-list."""
-        buckets = (manifest or {}).get("buckets", {})
+        buckets = manifest["buckets"]
         out: list[str] = []
         any_stale = False
-        for b in affected:
-            part_dir = os.path.join(self.path, f"{BUCKET_COL}={b}")
+        for b in sorted(buckets) if affected is None else affected:
             entry = buckets.get(str(b))
             if entry is None:
-                # No manifest entry.  Under a NEW-STYLE manifest that is
-                # definitive: either normal growth (bucket never existed)
-                # or a bucket a merge emptied — whose root dir, if any,
-                # holds only SUPERSEDED files awaiting vacuum that must
-                # not be resurrected.  Under a LEGACY manifest, a root
-                # directory it never learned about is a crashed
-                # old-protocol swap whose files are live (stale entry).
-                if manifest is not None and "gen" in manifest:
-                    continue
-                fresh = self._scan_bucket_dir(part_dir)
-                if fresh is not None:
-                    any_stale = True
-                    out.extend(
-                        os.path.join(part_dir, n) for n in fresh["files"]
-                    )
                 continue
-            rels = self._entry_paths(b, entry)
-            paths = [os.path.join(self.path, r) for r in rels]
+            paths = [os.path.join(self.path, r) for r in entry["paths"]]
             if not all(os.path.exists(p) for p in paths):
-                # Stale entry: a legacy crash between swap and manifest
-                # write, or external tampering with a generational table
-                # (our own commits never delete a referenced file inside
-                # the retention window).  Re-list the ONE directory the
-                # entry's files live in — a bucket is always rewritten
-                # whole, so all its files share a parent.
+                # Re-list the ONE directory the entry's files live in — a
+                # bucket is always rewritten whole, so they share a parent.
                 any_stale = True
-                parent = (
-                    os.path.dirname(paths[0]) if paths else part_dir
-                )
+                parent = os.path.dirname(paths[0])
                 fresh = self._scan_bucket_dir(parent)
                 paths = [
                     os.path.join(parent, n) for n in (fresh or {"files": []})["files"]
@@ -1062,14 +1074,13 @@ class ScdTable:
             out.extend(paths)
         return out, any_stale
 
-    def _write_meta(self) -> None:
-        """Record how this relation was built so the next run can apply the
-        reference's materialization-match rule (is_incremental.sql:18-28:
-        a relation last built by a DIFFERENT materialization forces a full
-        rebuild rather than an incremental merge)."""
-        import json
-
-        with open(self._meta_path(), "w") as f:
+    def _write_meta(self, root: str | None = None) -> None:
+        """Record how this relation was built (under ``root``, default the
+        table dir) so the next run can apply the reference's
+        materialization-match rule (is_incremental.sql:18-28: a relation
+        last built by a DIFFERENT materialization forces a full rebuild
+        rather than an incremental merge)."""
+        with open(os.path.join(root or self.path, "_scd_meta.json"), "w") as f:
             json.dump(
                 {
                     "materialized": self.MATERIALIZATION,
@@ -1091,8 +1102,6 @@ class ScdTable:
         dbt replacing a ``table`` relation when the model switches to
         ``scd``.  ``_write_meta`` runs on every build, so unknown-provenance
         tables are backfilled after one incremental cycle."""
-        import json
-
         try:
             with open(self._meta_path()) as f:
                 meta = json.load(f)
@@ -1106,54 +1115,26 @@ class ScdTable:
     def read(self) -> DataFrame:
         manifest = self._read_manifest()
         self._adopt_bucket_count(manifest)
-        if not self.partition_buckets and not (manifest or {}).get("schema"):
-            return self.spark.read.parquet(self.path)
-        if not manifest or not manifest.get("schema"):
-            try:
-                root_names = os.listdir(self.path)
-            except OSError:
-                # Missing/unreadable table dir: fall through to the Spark
-                # read so the caller gets the usual [PATH_NOT_FOUND]
-                # AnalysisException, not a bare FileNotFoundError.
-                root_names = []
-            if any(n.startswith(GEN_PREFIX) for n in root_names):
-                # Manifest-less GENERATIONAL table (manifest deleted out of
-                # band): Spark's recursive discovery skips the
-                # underscore-prefixed generation dirs, so reconstruct the
-                # file set the way the merge-path migration does (newest
-                # generation wins per bucket).
-                recon = self._scan_full_manifest("")
-                paths = [
-                    os.path.join(self.path, r)
-                    for e in recon["buckets"].values()
-                    for r in e["paths"]
-                ]
-                return self.spark.read.option("mergeSchema", "true").parquet(*paths)
-            # Pre-manifest legacy table: recursive discovery (one-time; the
-            # next build writes the manifest).
-            return self.spark.read.parquet(self.path).drop(BUCKET_COL)
-        # Manifest-backed full read: ONE root readdir (catches bucket dirs a
-        # crashed swap created before its manifest commit) + per-bucket
-        # verify-and-relist, instead of Spark's recursive stat walk over
-        # every partition — the read-side twin of the merge path's listing
-        # fix.  Data files never contain BUCKET_COL (a partition-dir
-        # column), so reading leaf files directly needs no drop().
-        # Bucket membership: a NEW-STYLE manifest is authoritative — it is
-        # the committed snapshot (migration adopts any root dirs a legacy
-        # crash left unknown, and a popped entry's root dir holds only
-        # superseded files awaiting vacuum, which must NOT be served).
-        # Orphan `_gen-*` dirs are likewise invisible until committed.  A
-        # LEGACY manifest still unions in root dirs it never learned about
-        # (a crashed old-protocol swap wrote them live).
-        bucket_ids = set(map(str, (manifest.get("buckets") or {}).keys()))
-        if "gen" not in manifest:
-            bucket_ids |= {
-                n.split("=", 1)[1]
-                for n in os.listdir(self.path)
-                if n.startswith(f"{BUCKET_COL}=")
-            }
-        files, stale = self._affected_files(manifest, sorted(bucket_ids))
-        return self._leaf_read(files, stale, manifest["schema"])
+        if manifest is not None:
+            # Manifest-backed full read: per-bucket verify-and-relist of the
+            # committed snapshot instead of Spark's recursive stat walk over
+            # every partition — the read-side twin of the merge path's
+            # listing fix.  Orphan `_gen-*` dirs stay invisible until
+            # committed.  Data files never contain BUCKET_COL (a
+            # partition-dir column), so reading leaf files needs no drop().
+            files, stale = self._affected_files(manifest)
+            return self._leaf_read(files, stale, manifest["schema"])
+        if self.partition_buckets:
+            # Manifest-loss recovery: Spark's discovery would skip the
+            # underscore-prefixed generation dirs, so serve the rebuilt
+            # file set (newest generation wins per bucket), schema merged
+            # from the footers.
+            files, _ = self._affected_files(self._scan_full_manifest())
+            if files:
+                return self.spark.read.option("mergeSchema", "true").parquet(*files)
+        # Unbucketed table, or no data files at all — a missing table dir
+        # surfaces Spark's usual [PATH_NOT_FOUND] AnalysisException.
+        return self.spark.read.parquet(self.path)
 
     def _bucket_expr(self, df: DataFrame, buckets: int | None = None):
         # Stable across runs and engines enough for partitioning: md5 of the
@@ -1292,13 +1273,6 @@ class ScdTable:
         store this is exactly a table-format commit (Delta/Iceberg):
         immutable data files + a conditional pointer write.
         """
-        # Sweep parked-partition remnants from the OLD swap protocol's
-        # crashes (dot-prefixed, invisible to Spark) — legacy tables only.
-        import glob
-
-        for leftover in glob.glob(os.path.join(self.path, f".{BUCKET_COL}=*__old")):
-            shutil.rmtree(leftover, ignore_errors=True)
-        self._sweep_stale_stages()
         affected = [
             r[0]
             for r in batch.select(self._bucket_expr(batch).alias("b")).distinct().collect()
@@ -1306,9 +1280,9 @@ class ScdTable:
         if not affected:
             # Empty incremental batch (a realistic CDC input): no bucket is
             # touched, so the merge is a no-op — and `.repartition(0, ...)`
-            # below would raise.  Keep provenance current and leave the
-            # table untouched, same net effect as the vanilla path merging
-            # an empty batch.
+            # would raise.  Keep provenance current and leave the table
+            # untouched, same net effect as the vanilla path merging an
+            # empty batch.
             self._write_meta()
             return
         # Resolve the target slice through the manifest: O(affected-bucket)
@@ -1318,79 +1292,31 @@ class ScdTable:
         t0 = time.perf_counter()
         if manifest is None:
             manifest = self._read_manifest()
-        if manifest is None and any(
-            n.startswith((f"{BUCKET_COL}=", GEN_PREFIX))
-            for n in os.listdir(self.path)
-        ):
-            # Manifest-less table: one-time migration listing (same cost the
-            # old full-listing path paid EVERY merge).  Newest generation
-            # wins per bucket (at-least-once commit adoption — see
-            # _scan_full_manifest); the schema is merged from the adopted
-            # files' footers since the manifest's record is gone.
-            manifest = self._scan_full_manifest("")
-            all_files = [
-                os.path.join(self.path, r)
-                for e in manifest["buckets"].values()
-                for r in e["paths"]
-            ]
+        if manifest is None:
+            # Manifest-loss recovery: one listing of the table (the cost
+            # the pre-manifest path paid EVERY merge); the schema is merged
+            # from the recovered files' footers since its record is gone.
+            manifest = self._scan_full_manifest()
+            all_files, _ = self._affected_files(manifest)
             if all_files:
                 manifest["schema"] = (
                     self.spark.read.option("mergeSchema", "true")
                     .parquet(*all_files)
                     .schema.json()
                 )
-            else:
-                manifest = None
-        elif manifest is not None and "gen" not in manifest:
-            manifest = self._normalize_manifest(manifest)
-        if manifest is not None:
-            manifest.setdefault("superseded", {})
-            self._sweep_orphan_generations()
-            # Backfill the PRE-merge generation's snapshot if it is missing
-            # (legacy table normalized in place, pre-snapshot-era table, or
-            # a crash between a commit and its snapshot write): the state
-            # this merge displaces must stay time-travel-readable for the
-            # full retention window.
-            base_gen = manifest.get("gen", 0)
-            if manifest.get("schema") and not os.path.exists(
-                self._snapshot_manifest_path(base_gen)
-            ):
-                self._write_snapshot_manifest(manifest)
+        self._begin_commit(manifest)
         files, stale = self._affected_files(manifest, affected)
-        schema_json = (manifest or {}).get("schema")
-        from pyspark.sql.types import StructType
-
-        data_schema = (
-            StructType.fromJson(json.loads(schema_json)) if schema_json else None
-        )
-        if files:
-            reader = self.spark.read
-            if data_schema is not None and not stale:
-                reader = reader.schema(data_schema)
-            elif stale:
-                # Crash-recovery path: the relisted files may be newer than
-                # the manifest's recorded schema — derive it from footers.
-                reader = reader.option("mergeSchema", "true")
-            target_slice = reader.parquet(*files)
-        elif data_schema is not None:
-            # All affected buckets are brand new — merge against an empty
-            # target slice of the recorded schema.
-            target_slice = self.spark.createDataFrame([], data_schema)
+        if files or manifest["schema"]:
+            # An empty file set (all affected buckets brand new) merges
+            # against an empty slice of the recorded schema.
+            target_slice = self._leaf_read(files, stale, manifest["schema"])
         else:
-            # No files AND no recorded schema (legacy empty table): derive
-            # the SCD output schema from the batch itself.
+            # A recovered table with no data files: derive the SCD output
+            # schema from the batch itself.
             target_slice = scd2_initial_load(batch.limit(0), self.cfg)
         self.last_phase_times = {"list_affected": time.perf_counter() - t0}
         t0 = time.perf_counter()
         merged = (merge_fn or self.merge_fn)(target_slice, batch, self.cfg)
-        # base_gen: the committed generation this merge planned against —
-        # None only when no committed new-style manifest existed (fresh
-        # migration), where the rename below is the sole (sufficient) gate.
-        base_gen = manifest.get("gen") if manifest is not None else None
-        manifest = manifest or {"gen": 0, "buckets": {}, "superseded": {}}
-        gen = manifest.get("gen", 0) + 1
-        gen_rel = _gen_dirname(gen)
-        gen_dir = os.path.join(self.path, gen_rel)
         # Stage into a writer-PRIVATE dir: two concurrent merges targeting
         # the same next generation would otherwise scribble into one
         # directory (mode("overwrite") deletes the other's files mid-write
@@ -1398,72 +1324,33 @@ class ScdTable:
         # commit, by _commit_transaction's rename.
         stage_dir = self._new_stage_dir()
         try:
-            (
-                merged.withColumn(BUCKET_COL, self._bucket_expr(merged))
-                # One file per touched bucket partition (not one per shuffle
-                # task per partition): without this co-location the generation
-                # dirs inherit the task fan-out and the table's file count
-                # grows ∝ writes × buckets — every later merge then pays a
-                # full-listing of all of them (measured: the s40 bucketed
-                # merge cost grew WITH the table until this fix).
-                .repartition(len(affected), F.col(BUCKET_COL))
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(stage_dir)
+            written = self._write_buckets(
+                merged, stage_dir, len(affected),
+                _gen_dirname(manifest["gen"] + 1),
             )
-            self.last_phase_times["merge_and_stage"] = time.perf_counter() - t0
-            # The generation is durable and invisible; COMMIT by patching the
-            # affected buckets' entries (O(batch) scanning, not O(table)) and
-            # atomically replacing the manifest.  The displaced files — the
-            # exact file set the merge's target slice read — go on the
-            # superseded ledger under this commit's gen for deferred vacuum.
-            displaced = [os.path.relpath(p, self.path) for p in files]
-            for b in affected:
-                entry = self._scan_bucket_dir(
-                    os.path.join(stage_dir, f"{BUCKET_COL}={b}")
-                )
-                if entry is None:
-                    # The merge emptied this bucket (or the batch never had
-                    # survivors for it): no files in this generation.
-                    manifest["buckets"].pop(str(b), None)
-                else:
-                    manifest["buckets"][str(b)] = {
-                        "paths": [
-                            f"{gen_rel}/{BUCKET_COL}={b}/{n}"
-                            for n in entry["files"]
-                        ],
-                        "rows": entry["rows"],
-                    }
-            if displaced:
-                manifest["superseded"][str(gen)] = displaced
-            manifest["gen"] = gen
-            manifest["schema"] = merged.schema.json()
-            # Record the effective retention as a TABLE property (an explicit
-            # constructor value updates it; default writers inherit it), so no
-            # later writer can vacuum underneath a reader that opened the
-            # table under a longer window.
-            manifest["retain"] = self._retain(manifest)
-            manifest["bucket_count"] = self.partition_buckets
-            manifest["op"] = op
-            manifest["committed_at"] = time.time()
-            if txn_epoch is not None:
-                # Recorded atomically WITH the data pointer, SCOPED per writer
-                # application (Delta txnAppId/txnVersion): replaying this epoch
-                # after any crash sees either no trace of it (orphan gen swept,
-                # re-merge) or the completed commit (skipped) — never a
-                # half-applied state — and an unrelated stream's epoch counter
-                # can never shadow this one's.  See build()'s exactly-once note.
-                manifest.setdefault("txn", {})[txn_app] = txn_epoch
-            self._commit_and_vacuum(stage_dir, gen_dir, base_gen, manifest, gen)
         finally:
-            # Release the merge's persisted intermediates whether the commit
-            # SUCCEEDED (their plans hold leaf files now on the superseded
-            # ledger — refreshByPath re-caching them would pin listings
-            # vacuum deletes later) or ABORTED (the advertised
-            # ConcurrentWriteError retry must not leak one dead cache pair
-            # per conflicted attempt).
+            # The staged write is the merge result's last execution:
+            # release its persisted intermediates now, whether it
+            # succeeded (their plans hold leaf files about to go on the
+            # superseded ledger — the commit's refreshByPath re-caching
+            # them would pin listings vacuum deletes later) or failed (a
+            # retry must not leak one dead cache pair per attempt).
             _release_intermediates(merged)
-        self.spark.catalog.refreshByPath(self.path)
+        self.last_phase_times["merge_and_stage"] = time.perf_counter() - t0
+        # The generation is durable and invisible; COMMIT by patching the
+        # affected buckets' entries (a bucket the merge emptied has none)
+        # and atomically replacing the manifest.  The displaced files — the
+        # exact file set the merge's target slice read — go on the
+        # superseded ledger under this commit's gen for deferred vacuum.
+        for b in affected:
+            manifest["buckets"].pop(str(b), None)
+        manifest["buckets"].update(written)
+        self._commit(
+            manifest, stage_dir, [os.path.relpath(p, self.path) for p in files],
+            schema_json=merged.schema.json(), op=op,
+            bucket_count=self.partition_buckets,
+            txn_epoch=txn_epoch, txn_app=txn_app,
+        )
 
     def rebucket(self, new_count: int) -> DataFrame:
         """Change the table's bucket count — the maintenance op for data
@@ -1485,18 +1372,12 @@ class ScdTable:
         if manifest is None:
             raise ValueError(
                 f"rebucket() needs a bucketed table with a manifest at "
-                f"{self.path}; rebuild unbucketed/legacy tables with "
-                "build(full_refresh=True) instead"
+                f"{self.path}; rebuild unbucketed or manifest-less tables "
+                "with build(full_refresh=True) instead"
             )
-        if "gen" not in manifest:
-            manifest = self._normalize_manifest(manifest)
-        manifest.setdefault("superseded", {})
         t0 = time.perf_counter()
-        self._sweep_orphan_generations()
-        self._sweep_stale_stages()
-        old_files, stale = self._affected_files(
-            manifest, sorted(manifest.get("buckets", {}))
-        )
+        self._begin_commit(manifest)
+        old_files, stale = self._affected_files(manifest)
         self.last_phase_times = {"list_affected": time.perf_counter() - t0}
         t0 = time.perf_counter()
         # Plan the current table directly from the file list just resolved
@@ -1504,29 +1385,7 @@ class ScdTable:
         # rather than via self.read() — which would also re-run bucket-count
         # adoption and refuse a handle constructed with the NEW count, the
         # very caller this method exists for.
-        from pyspark.sql.types import StructType
-
-        schema_json = manifest.get("schema")
-        if not old_files:
-            if not schema_json:
-                raise ValueError(
-                    f"cannot rebucket empty schemaless table at {self.path}"
-                )
-            current = self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(schema_json))
-            )
-        elif stale or not schema_json:
-            current = self.spark.read.option("mergeSchema", "true").parquet(
-                *old_files
-            )
-        else:
-            current = self.spark.read.schema(
-                StructType.fromJson(json.loads(schema_json))
-            ).parquet(*old_files)
-        base_gen = manifest.get("gen", 0)
-        gen = base_gen + 1
-        gen_rel = _gen_dirname(gen)
-        gen_dir = os.path.join(self.path, gen_rel)
+        current = self._leaf_read(old_files, stale, manifest["schema"])
         # Stage privately under the NEW mapping, claim the generation at
         # commit — same optimistic-concurrency protocol as the incremental
         # merge.  Handle state (partition_buckets / _explicit_buckets)
@@ -1534,39 +1393,19 @@ class ScdTable:
         # must leave this handle merging under the OLD mapping, not
         # hard-failing every later build() on a bucket-count mismatch.
         stage_dir = self._new_stage_dir()
-        (
-            current.withColumn(BUCKET_COL, self._bucket_expr(current, new_count))
-            .repartition(new_count, F.col(BUCKET_COL))
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(stage_dir)
+        manifest["buckets"] = self._write_buckets(
+            current, stage_dir, new_count, _gen_dirname(manifest["gen"] + 1),
+            buckets=new_count,
         )
         self.last_phase_times["rewrite"] = time.perf_counter() - t0
-        new_buckets: dict[str, dict] = {}
-        for name in os.listdir(stage_dir):
-            if not name.startswith(f"{BUCKET_COL}="):
-                continue
-            entry = self._scan_bucket_dir(os.path.join(stage_dir, name))
-            if entry is None:
-                continue
-            new_buckets[name.split("=", 1)[1]] = {
-                "paths": [f"{gen_rel}/{name}/{n}" for n in entry["files"]],
-                "rows": entry["rows"],
-            }
-        manifest["buckets"] = new_buckets
-        displaced = [os.path.relpath(p, self.path) for p in old_files]
-        if displaced:
-            manifest["superseded"][str(gen)] = displaced
-        manifest["gen"] = gen
-        manifest["schema"] = current.schema.json()
-        manifest["retain"] = self._retain(manifest)
-        manifest["bucket_count"] = new_count
-        manifest["op"] = "rebucket"
-        manifest["committed_at"] = time.time()
-        self._commit_and_vacuum(stage_dir, gen_dir, base_gen, manifest, gen)
+        self._commit(
+            manifest, stage_dir,
+            [os.path.relpath(p, self.path) for p in old_files],
+            schema_json=current.schema.json(), op="rebucket",
+            bucket_count=new_count,
+        )
         self.partition_buckets = new_count
         self._explicit_buckets = True
-        self.spark.catalog.refreshByPath(self.path)
         return self.read()
 
     def restore(self, gen: int) -> DataFrame:
@@ -1604,39 +1443,27 @@ class ScdTable:
         tampering) scenario — the same class of caveat as deleting a
         Delta table's ``_delta_log``."""
         manifest = self._read_manifest()
-        if manifest is None or "gen" not in manifest:
+        if manifest is None:
             raise ValueError(
                 f"restore() needs a bucketed generational table with a "
-                f"manifest at {self.path}; rebuild unbucketed/legacy "
-                "tables with build(full_refresh=True) instead"
+                f"manifest at {self.path}; rebuild unbucketed or "
+                "manifest-less tables with build(full_refresh=True) instead"
             )
-        manifest.setdefault("superseded", {})
         snap = self._retained_manifests().get(gen)
         if snap is None or not snap.get("schema"):
             raise ValueError(
                 f"no retained snapshot for generation {gen} "
-                f"(current gen: {manifest.get('gen')}, retention: "
+                f"(current gen: {manifest['gen']}, retention: "
                 f"{self._retain(manifest)} generations — older "
                 "snapshots are vacuumed)"
             )
         t0 = time.perf_counter()
-        self._sweep_orphan_generations()
-        self._sweep_stale_stages()
-        # Backfill the CURRENT generation's snapshot if it is missing
-        # (crash between a commit's manifest replace and its snapshot
-        # write): the state this restore displaces must stay
-        # time-travel-readable for the full retention window — the same
-        # guarantee the merge path makes before displacing a state.
-        if manifest.get("schema") and not os.path.exists(
-            self._snapshot_manifest_path(manifest["gen"])
-        ):
-            self._write_snapshot_manifest(manifest)
-        restored_buckets: dict[str, dict] = {}
-        restored_rel: set[str] = set()
-        for b, e in (snap.get("buckets") or {}).items():
-            rels = self._entry_paths(b, e)
-            restored_buckets[str(b)] = {"paths": rels, "rows": e.get("rows", -1)}
-            restored_rel.update(rels)
+        self._begin_commit(manifest)
+        restored_buckets = {
+            str(b): {"paths": list(e["paths"]), "rows": e.get("rows", -1)}
+            for b, e in snap["buckets"].items()
+        }
+        restored_rel = {r for e in restored_buckets.values() for r in e["paths"]}
         missing = sorted(
             r for r in restored_rel
             if not os.path.exists(os.path.join(self.path, r))
@@ -1647,11 +1474,8 @@ class ScdTable:
                 f"{len(missing)} referenced file(s) are gone (vacuumed "
                 f"out-of-band?), e.g. {missing[0]}"
             )
-        current_files, _ = self._affected_files(
-            manifest, sorted(manifest.get("buckets", {}))
-        )
+        current_files, _ = self._affected_files(manifest)
         current_rel = {os.path.relpath(p, self.path) for p in current_files}
-        displaced = sorted(current_rel - restored_rel)
         # Re-referenced paths come OFF the ledger: they are live again, and
         # a later commit that displaces them re-ledgers them under ITS gen.
         for k in list(manifest["superseded"]):
@@ -1660,34 +1484,20 @@ class ScdTable:
                 manifest["superseded"][k] = kept
             else:
                 del manifest["superseded"][k]
-        base_gen = manifest["gen"]
-        new_gen = base_gen + 1
-        if displaced:
-            manifest["superseded"][str(new_gen)] = displaced
         manifest["buckets"] = restored_buckets
-        manifest["gen"] = new_gen
-        manifest["schema"] = snap["schema"]
-        manifest["retain"] = self._retain(manifest)
-        new_bucket_count = snap.get("bucket_count") or self.partition_buckets
-        manifest["bucket_count"] = new_bucket_count
-        manifest["op"] = "restore"
-        manifest["committed_at"] = time.time()
+        bucket_count = snap.get("bucket_count") or self.partition_buckets
         self.last_phase_times = {"plan_restore": time.perf_counter() - t0}
         stage_dir = self._new_stage_dir()
         os.makedirs(stage_dir)
-        self._commit_and_vacuum(
-            stage_dir,
-            os.path.join(self.path, _gen_dirname(new_gen)),
-            base_gen,
-            manifest,
-            new_gen,
+        self._commit(
+            manifest, stage_dir, sorted(current_rel - restored_rel),
+            schema_json=snap["schema"], op="restore", bucket_count=bucket_count,
         )
         # Handle state flips only AFTER the commit (mirrors rebucket): an
         # aborted transaction must leave this handle on the old mapping.
-        if new_bucket_count:
-            self.partition_buckets = new_bucket_count
+        if bucket_count:
+            self.partition_buckets = bucket_count
             self._explicit_buckets = True
-        self.spark.catalog.refreshByPath(self.path)
         return self.read()
 
     def delete_keys(self, keys: DataFrame) -> DataFrame:
@@ -1711,7 +1521,7 @@ class ScdTable:
         fall out of the retention window and vacuum removes them — full
         physical erasure = this delete + ``retain_generations`` further
         commits (or a table created with ``retain_generations=1`` for the
-        tightest window).  Unbucketed / legacy tables fall back to a
+        tightest window).  Unbucketed / manifest-less tables fall back to a
         full-table rewrite (no bucket map to prune by) via the atomic
         swap path — correct, just unpruned."""
         key_cols = list(self.cfg.unique_key)
@@ -1730,12 +1540,7 @@ class ScdTable:
         try:
             manifest = self._read_manifest()
             self._adopt_bucket_count(manifest)
-            if (
-                self.partition_buckets
-                and manifest is not None
-                and manifest.get("schema")
-                and "gen" in manifest
-            ):
+            if self.partition_buckets and manifest is not None:
                 self._build_bucketed_incremental(
                     cand, manifest=manifest, merge_fn=_anti, op="delete"
                 )
@@ -1784,9 +1589,8 @@ class ScdTable:
             if not locked:
                 return 0
             manifest = self._read_manifest()
-            if manifest is None or "gen" not in manifest:
+            if manifest is None:
                 return 0
-            manifest.setdefault("superseded", {})
             gen = manifest["gen"]
             before = json.dumps(manifest["superseded"], sort_keys=True)
             removed = self._vacuum(
@@ -1817,27 +1621,24 @@ class ScdTable:
         prior_manifest: dict | None = None,
     ) -> None:
         tmp = self.path + "__tmp"
-        result = df  # the operator output carrying _scd_intermediates
-        data_schema_json = df.schema.json()
-        writer = df.write.mode("overwrite")
-        if self.partition_buckets:
-            df = df.withColumn(BUCKET_COL, self._bucket_expr(df))
-            # One ~50k-row file per bucket dir; without the co-locating
-            # repartition the initial build writes up to tasks×buckets
-            # small files and every incremental merge pays an O(files)
-            # listing of the whole table (see _build_bucketed_incremental).
-            df = df.repartition(self.partition_buckets, F.col(BUCKET_COL))
-            writer = df.write.mode("overwrite").partitionBy(BUCKET_COL)
-        writer.parquet(tmp)
+        try:
+            if self.partition_buckets:
+                # One ~50k-row file per bucket dir (see _write_buckets).
+                buckets = self._write_buckets(df, tmp, self.partition_buckets)
+            else:
+                df.write.mode("overwrite").parquet(tmp)
+        finally:
+            # The write is the operator output's last execution: release
+            # its persisted intermediates (planned over leaf files the swap
+            # below deletes) before refreshByPath could re-cache them.
+            _release_intermediates(df)
         if self.partition_buckets:
             # Seed the partition manifest INSIDE the staging dir, BEFORE
             # the rename: data, manifest, meta, and the recorded stream
             # epoch all become visible in the ONE atomic rename — a crash
             # can never expose a committed table missing its epoch record
             # (under which a streamed initial load's replay would
-            # double-apply).  The full listing here is proportional to the
-            # write that just happened, not to future merges.
-            seeded = self._scan_full_manifest(data_schema_json, root=tmp)
+            # double-apply).
             # TABLE properties survive a full refresh (Delta preserves
             # table properties and txnAppId/txnVersion pairs across
             # overwrites): `retain` keeps the recorded window instead of
@@ -1847,43 +1648,29 @@ class ScdTable:
             # epoch would re-merge) — and the generation counter stays
             # monotonic so a pre-refresh `read_at_gen(G)` can never be
             # silently served some unrelated post-refresh generation G.
-            if prior_manifest is not None:
-                seeded["gen"] = max(
-                    seeded.get("gen", 0), prior_manifest.get("gen", 0) + 1
-                )
-            seeded["retain"] = self._retain(
-                prior_manifest if prior_manifest is not None else seeded
+            prior = prior_manifest or {}
+            manifest = {"buckets": buckets, "superseded": {}}
+            if "retain" in prior:
+                manifest["retain"] = prior["retain"]
+            if prior.get("txn"):
+                manifest["txn"] = dict(prior["txn"])
+            gen = prior["gen"] + 1 if prior else 0
+            self._stamp(
+                manifest, gen, df.schema.json(), "create",
+                self.partition_buckets, txn_epoch, txn_app,
             )
-            seeded["bucket_count"] = self.partition_buckets
-            seeded["op"] = "create"
-            seeded["committed_at"] = time.time()
-            txn = dict((prior_manifest or {}).get("txn") or {})
-            if txn_epoch is not None:
-                txn[txn_app] = txn_epoch
-            if txn:
-                seeded["txn"] = txn
             for name in (
-                "_scd_manifest.json",
-                f"_scd_manifest.{seeded.get('gen', 0):08d}.json",
+                os.path.basename(self._manifest_path()),
+                os.path.basename(self._snapshot_manifest_path(gen)),
             ):
                 with open(os.path.join(tmp, name), "w") as f:
-                    json.dump(seeded, f)
-        with open(os.path.join(tmp, "_scd_meta.json"), "w") as f:
-            json.dump(
-                {"materialized": self.MATERIALIZATION, "scd_type": self.cfg.scd_type},
-                f,
-            )
+                    json.dump(manifest, f)
+        self._write_meta(tmp)
         old = self.path + "__old"
         if os.path.exists(self.path):
             os.rename(self.path, old)
         os.rename(tmp, self.path)
         shutil.rmtree(old, ignore_errors=True)
-        # Release the merge's persisted intermediates BEFORE refreshing —
-        # same ordering as _build_bucketed_incremental: they were planned
-        # over leaf files the swap just deleted, and refreshByPath would
-        # otherwise recache the dead plans (re-listing deleted files on
-        # every vanilla merge).
-        _release_intermediates(result)
         # Invalidate cached file listings for readers of the swapped path.
         self.spark.catalog.refreshByPath(self.path)
 

@@ -3,24 +3,21 @@
 The reference is batch/micro-batch only (SURVEY.md §2.9): each dbt run
 processes one batch, and "late data" is reconciled logically.  The exact
 Spark equivalent is ``foreachBatch`` — each micro-batch flows through the
-SAME ``scd2_incremental`` plan the batch path uses, so streaming and batch
+SAME ``ScdTable.build`` the batch path uses, so streaming and batch
 semantics are identical by construction (no separate state-store logic to
 keep in sync).
 
-The sink keeps the target as parquet with an atomic directory swap
-(write to ``_tmp`` → rename), mirroring the vanilla-merge durability story
-(SURVEY.md §7.3 item 5).
+Both sinks write through ``plans/build.py::ScdTable``: the plain sink takes
+its atomic tmp-dir swap (the vanilla-merge durability story, SURVEY.md §7.3
+item 5), the bucketed sink its generational commit.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.scd2 import scd2_incremental, scd2_initial_load
+from ..plans.build import ConcurrentWriteError, ScdTable
 from ..plans.config import ScdConfig
 
 
@@ -31,9 +28,10 @@ class Scd2ParquetSink:
         self.spark = spark
         self.path = path
         self.cfg = cfg
+        self.table = ScdTable(spark, path, cfg)
 
     def exists(self) -> bool:
-        return os.path.exists(os.path.join(self.path, "_SUCCESS"))
+        return self.table.exists()
 
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.path)
@@ -43,26 +41,23 @@ class Scd2ParquetSink:
         an atomic tmp-dir swap so readers never see a half-written table."""
         if batch.isEmpty():
             return
-        if not self.exists():
-            result = scd2_initial_load(batch, self.cfg)
-        else:
-            result = scd2_incremental(self.read(), batch, self.cfg)
-        tmp = self.path + "__tmp"
-        result.write.mode("overwrite").parquet(tmp)
-        old = self.path + "__old"
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
-        # Release the merge's persisted intermediates: a long-running stream
-        # would otherwise accumulate one dead (input files swapped away)
-        # cache entry pair PER MICRO-BATCH in the CacheManager.
-        from ..plans.build import _release_intermediates
-
-        _release_intermediates(result)
+        self.table.build(batch)
 
     def foreach_batch(self, batch: DataFrame, batch_id: int) -> None:
         self.apply_batch(batch)
+
+
+def _start(
+    stream: DataFrame, sink, checkpoint: str | None, available_now: bool
+) -> StreamingQuery:
+    """Start ``sink.foreach_batch`` on ``stream`` — the writer setup both
+    stream entry points share."""
+    writer = stream.writeStream.foreachBatch(sink.foreach_batch).outputMode("append")
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def scd2_write_stream(
@@ -78,12 +73,7 @@ def scd2_write_stream(
     (the batch-parity mode); pass False for a continuous micro-batch query.
     """
     sink = Scd2ParquetSink(stream.sparkSession, path, cfg)
-    writer = stream.writeStream.foreachBatch(sink.foreach_batch).outputMode("append")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, sink, checkpoint, available_now)
 
 
 class Scd2BucketedSink:
@@ -107,8 +97,6 @@ class Scd2BucketedSink:
         txn_app: str = "default",
         merge_fn=None,
     ):
-        from ..plans.build import ScdTable
-
         self.table = ScdTable(
             spark, path, cfg,
             partition_buckets=partition_buckets,
@@ -147,8 +135,6 @@ class Scd2BucketedSink:
     def foreach_batch(self, batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        from ..plans.build import ConcurrentWriteError
-
         for attempt in range(self.CONFLICT_RETRIES + 1):
             try:
                 self.table.build(
@@ -183,9 +169,4 @@ def scd2_write_stream_bucketed(
         retain_generations=retain_generations, txn_app=txn_app,
         merge_fn=merge_fn,
     )
-    writer = stream.writeStream.foreachBatch(sink.foreach_batch).outputMode("append")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, sink, checkpoint, available_now)

@@ -21,7 +21,7 @@ CFG = ScdConfig(unique_key=("customer_id",), deleted_at_column="deleted_at")
 def _manifest_paths(t):
     """bucket id -> sorted root-relative data-file paths, from the manifest."""
     m = t._read_manifest()
-    return {b: sorted(t._entry_paths(b, e)) for b, e in m["buckets"].items()}
+    return {b: sorted(e["paths"]) for b, e in m["buckets"].items()}
 
 
 def _touched(t, batch_df):
@@ -258,7 +258,9 @@ def test_manifest_missing_migrates_legacy_table(spark, tmp_path):
 
 def test_legacy_style_manifest_upgraded_in_place(spark, tmp_path):
     """A pre-generation manifest ({"files": [...]} entries, no "gen") is
-    normalized by its next merge; data matches the plain build throughout."""
+    not a manifest in the current format, so manifest-loss recovery serves
+    the table and its next merge commits a current-format manifest; data
+    matches the plain build throughout."""
     path = str(tmp_path / "oldstyle")
     t = ScdTable(spark, path, CFG, partition_buckets=8)
     t.build(spark.createDataFrame(CUSTOMERS_RAW[1], CUSTOMERS_SCHEMA))
@@ -462,7 +464,7 @@ def test_read_keys_prunes_to_affected_buckets(spark, tmp_path):
     allowed = {
         os.path.join(path, rel)
         for b in affected
-        for rel in t._entry_paths(b, m["buckets"][b])
+        for rel in m["buckets"][b]["paths"]
     }
     total = sum(len(e["paths"]) for e in m["buckets"].values())
     scanned = {f.removeprefix("file://") for f in got.inputFiles()}
@@ -660,6 +662,21 @@ def test_bucket_count_is_a_table_property(spark, tmp_path):
     t3 = ScdTable(spark, path, CFG, partition_buckets=16)
     with _pytest.raises(ValueError, match="rebucket"):
         t3.build(spark.createDataFrame(CUSTOMERS_RAW[4], CUSTOMERS_SCHEMA))
+
+    # An existing UNBUCKETED table has a layout too: an explicit count
+    # must refuse (pointing at a full refresh) rather than merge against
+    # an empty bucket slice that hides the table's history, and the
+    # table must be left untouched.
+    plain_path = str(tmp_path / "bprop_plain")
+    plain = ScdTable(spark, plain_path, CFG)
+    plain.build(spark.createDataFrame(CUSTOMERS_RAW[1], CUSTOMERS_SCHEMA))
+    want_plain = _expected(spark, str(tmp_path / "bp_plain"), [CUSTOMERS_RAW[1]])
+    files_before = sorted(os.listdir(plain_path))
+    t4 = ScdTable(spark, plain_path, CFG, partition_buckets=8)
+    with _pytest.raises(ValueError, match=r"full_refresh=True"):
+        t4.build(spark.createDataFrame(CUSTOMERS_RAW[2], CUSTOMERS_SCHEMA))
+    assert sorted(os.listdir(plain_path)) == files_before
+    _assert_same(plain.read(), want_plain)
 
 
 def test_rebucket_rewrites_layout_and_preserves_history(spark, tmp_path):
@@ -862,7 +879,7 @@ def test_recovery_gen_precedence_is_numeric_not_lexical(spark, tmp_path):
             pass
 
     t = ScdTable(spark, base, CFG, partition_buckets=4)
-    recon = t._scan_full_manifest("{}")
+    recon = t._scan_full_manifest()
     assert recon["gen"] == 100000000
     assert recon["buckets"]["3"]["paths"] == [f"{new_rel}/new.parquet"]
     assert recon["superseded"] == {"100000000": [f"{old_rel}/old.parquet"]}

@@ -145,20 +145,27 @@ def test_high_water_mark_and_incremental_source(spark):
 def test_release_entry_caches_frees_query_layer(spark):
     """A full driver session must be releasable: per-query persists
     route through the shared registry and the memo caches
-    (_MERGE_TARGET_CACHE/_INDEX_CACHE) are cleared+unpersisted by
-    entry.release_entry_caches (round-6 VERDICT hygiene item)."""
+    (_MERGE_TARGET_CACHE/_INDEX_CACHE) are cleared+unpersisted, and the
+    temp dirs they staged removed, by entry.release_entry_caches."""
+    import os
+    from urllib.parse import urlparse
+
     from dbt_scd2_utils_spark import entry as em
     from dbt_scd2_utils_spark.functions import caching
 
     em.release_entry_caches()  # clean slate
     sf = "/root/testdata/sf0.001"
     em.q_scd2_diff_cdc(spark, sf).count()          # per-query barrier
-    em._staged_target(spark, sf, em.SCD2_CFG, "collapse")  # memo cache
+    staged = em._staged_target(spark, sf, em.SCD2_CFG, "collapse")  # memo cache
+    staged_dir = os.path.dirname(urlparse(staged.inputFiles()[0]).path)
+    assert os.path.isdir(staged_dir)
     assert len(caching._LIVE_CACHES) >= 1
     assert len(em._MERGE_TARGET_CACHE) == 1
     released = em.release_entry_caches()
     assert released >= 2
     assert caching._LIVE_CACHES == []
     assert em._MERGE_TARGET_CACHE == {} and em._INDEX_CACHE == {}
+    # the memo's staged mkdtemp tree is removed with it
+    assert not os.path.exists(staged_dir)
     # idempotent on an empty registry
     assert em.release_entry_caches() == 0

@@ -61,6 +61,10 @@ SLOW_QUERIES = {
     "semantic_dedup",
     "bpe_learn_merges_100",
 }
+# A renamed or removed query must not leave a stale slow marker behind.
+assert SLOW_QUERIES <= set(entry_mod.queries()), (
+    SLOW_QUERIES - set(entry_mod.queries())
+)
 
 QUERY_NAMES = [
     pytest.param(n, marks=pytest.mark.slow) if n in SLOW_QUERIES else n
